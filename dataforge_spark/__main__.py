@@ -171,6 +171,7 @@ def main(argv: list[str] | None = None) -> int:
         dfio.write_jsonl(out, args.output, compression=None)
     else:
         dfio.write_csv(out, args.output, single_file=args.single_file)
+    out.unpersist(blocking=False)  # pinned by metrics mode for the write
     print(json.dumps(sanitize_for_json(report), indent=2))
     return 0
 

@@ -48,24 +48,19 @@ def l2_distance(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def to_matrix(
-    vals: list, dim: int | None = None
-) -> tuple[np.ndarray, "np.ndarray | None"]:
-    """Arrow batch of array-typed values → ``(n, d)`` float64 matrix plus a
-    bad-row mask (or None when the batch is clean). NULL, ragged-length,
-    or non-numeric rows are zeroed and flagged instead of failing the
-    task — shared by every batched vector scorer (cosine, LSH buckets,
-    IVF assignment). The clean path is a single vectorized ``np.array``;
-    the row-wise salvage only runs when that fails."""
+def to_matrix(vals: list, dim: int) -> tuple[np.ndarray, "np.ndarray | None"]:
+    """Arrow batch of array-typed values → ``(n, dim)`` float64 matrix plus
+    a bad-row mask (or None when the batch is clean). NULL, ragged-length
+    (not ``dim`` wide), or non-numeric rows are zeroed and flagged instead
+    of failing the task — shared by every batched vector scorer (cosine,
+    LSH buckets, IVF assignment). The clean path is a single vectorized
+    ``np.array``; the row-wise salvage only runs when that fails."""
     try:
         X = np.array(vals, dtype=np.float64)
-        if X.ndim == 2 and (dim is None or X.shape[1] == dim):
+        if X.ndim == 2 and X.shape[1] == dim:
             return X, None
         raise ValueError
     except (ValueError, TypeError):
-        if dim is None:
-            dims = [len(x) for x in vals if x is not None]
-            dim = max(dims, default=1)
         X = np.zeros((len(vals), dim), dtype=np.float64)
         bad = np.zeros(len(vals), dtype=bool)
         for i, x in enumerate(vals):
@@ -88,21 +83,24 @@ def batch_cosine_udf():
 
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        X, bad_x = to_matrix(a.tolist())
-        Y, bad_y = to_matrix(b.tolist())
-        if X.shape[1] != Y.shape[1]:  # a-vs-b length mismatch: all NULL
-            return pd.Series([None] * len(a), dtype="float64")
-        num = np.einsum("nd,nd->n", X, Y)
-        den = np.linalg.norm(X, axis=1) * np.linalg.norm(Y, axis=1)
-        out = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-        if bad_x is not None or bad_y is not None:
-            bad = (bad_x if bad_x is not None else False) | (
-                bad_y if bad_y is not None else False
-            )
-            return pd.Series(
-                [None if bad[i] else float(v) for i, v in enumerate(out)],
-                dtype="float64",
-            )
+        a, b = a.tolist(), b.tolist()
+        # Each row pair is judged by its own lengths, never by the widest
+        # row of the Arrow batch, so a row's score cannot depend on which
+        # rows share its batch. Rows are scored in groups of equal width.
+        la = np.array([-1 if x is None else len(x) for x in a], dtype=np.int64)
+        lb = np.array([-1 if y is None else len(y) for y in b], dtype=np.int64)
+        out = np.full(len(a), np.nan)  # NaN leaves the UDF as NULL
+        for d in np.unique(la[(la >= 0) & (la == lb)]):
+            idx = np.flatnonzero((la == d) & (lb == d))
+            X, bad_x = to_matrix([a[i] for i in idx], int(d))
+            Y, bad_y = to_matrix([b[i] for i in idx], int(d))
+            num = np.einsum("nd,nd->n", X, Y)
+            den = np.linalg.norm(X, axis=1) * np.linalg.norm(Y, axis=1)
+            s = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
+            for bad in (bad_x, bad_y):
+                if bad is not None:
+                    s[bad] = np.nan
+            out[idx] = s
         return pd.Series(out)
 
     return cos

@@ -11,8 +11,20 @@ Spark-first differences (deliberate):
 * Transformations are composed LAZILY; nothing executes until the caller
   writes or collects. Catalyst then optimizes across op boundaries —
   filters merge, projections fuse, one scan instead of nine.
-* Per-op row/column metrics force an action per op in the reference; here
-  they are OPT-IN (``collect_metrics=True``) because each count is a job.
+* Per-op report metrics (row counts, changed cells, missing counts) are
+  OPT-IN (``collect_metrics=True``). The reference computes them with
+  pandas after every op; here the op loop runs no metric action. Metrics
+  mode pins (persists) every frame it measures, and after the loop ONE
+  aggregate query over the pinned frames, aligned on ``_row_id``, yields
+  every op's metrics (``boundary_metrics``); its job count does not grow
+  with the number of ops. For the nine-op service config on 1000 rows a
+  clean runs 31 jobs with metrics and 26 without. That query is also
+  the first full execution of the lineage, so in metrics mode
+  ``processing_time_seconds`` includes execution; the caller's write
+  then reads the pinned result (unpersist it after the write).
+  ``DataFrame.observe`` cannot replace the query: an ``Observation`` is
+  filled by the first action on the observed frame, even a partial one
+  such as the ``limit`` sample the datetime-format election takes.
 * The reference's stage-boundary scrub (±Inf→NaN→median-fill after EVERY
   op, /root/reference/pipeline.py:72-100,189) is bug-compat behavior —
   available via ``bug_compat=True`` (SURVEY §1), default off (advertised
@@ -21,13 +33,15 @@ Spark-first differences (deliberate):
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import time
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators import (
     datetime_parsing,
@@ -158,40 +172,129 @@ def boundary_scrub(df: DataFrame) -> DataFrame:
     return out
 
 
-def cells_changed(before: DataFrame, after: DataFrame) -> dict[str, int]:
-    """Per-column count of cells whose value differs between ``before`` and
-    ``after``, aligned on ``_row_id`` (reference parity: every method
-    reports per-column "Made N changes" updates,
-    /root/reference/methods/textCleaning.py:76,147-148). ONE join + one
-    aggregate covers ALL shared columns — not a job per column. Values are
-    compared as strings (so a type-converting op counts every re-typed
-    cell) and null-safely (NULL→value and value→NULL both count). Columns
-    added or dropped by the op are not "changed cells"; they show up in
-    the columns_before/after metrics instead. Returns {} when either side
-    lacks ``_row_id`` — without a row key there is no alignment to count
-    against."""
-    shared = [c for c in before.columns if c in after.columns and c != ROW_ID]
-    if not shared or ROW_ID not in before.columns or ROW_ID not in after.columns:
-        return {}
-    b = before.select(
-        ROW_ID, *[qcol(c).cast("string").alias(f"__b_{c}") for c in shared]
+def boundary_metrics(
+    pairs: list[tuple[DataFrame, DataFrame]], missing: Iterable[int] = ()
+) -> list[dict[str, Any]]:
+    """Report metrics for every ``(before, after)`` pair in ONE aggregate
+    query. Per pair: ``rows_before``/``rows_after``, and ``cells_changed``
+    — per shared column, the cells whose value differs between the two
+    frames, aligned on ``_row_id``; with ``missing_before``/
+    ``missing_after`` (``profile.missing_counts``) for the pair indices in
+    ``missing``.
+
+    Values are compared as strings (so a type-converting op counts every
+    re-typed cell) and null-safely (NULL→value and value→NULL both count).
+    Columns added or dropped by an op are not changed cells; a pair where
+    either side lacks ``_row_id`` has no alignment and reports {}.
+
+    The query unions the distinct frames (a frame shared by two pairs is
+    read once), groups the rows by ``_row_id`` and sums per group, so its
+    job count does not grow with the number of pairs: one scan stage over
+    every frame, the group shuffle and the final sum. Rows are counted
+    per frame, so counts stay exact when an op drops or adds rows; a
+    frame whose ``_row_id`` repeats a key compares only its first row of
+    that key. Rows of a frame without ``_row_id`` each form their own
+    group: they are counted and never compared."""
+    from .profile import _missing_expr, _user_fields
+
+    frames: list[DataFrame] = []
+
+    def index(df: DataFrame) -> int:
+        for j, f in enumerate(frames):
+            if f is df:
+                return j
+        frames.append(df)
+        return len(frames) - 1
+
+    ix = [(index(b), index(a)) for b, a in pairs]
+    if not frames:
+        return []
+    keyed = [ROW_ID in f.columns for f in frames]
+    shared = [
+        [c for c in frames[b].columns if c != ROW_ID and c in frames[a].columns]
+        if keyed[b] and keyed[a] else []
+        for b, a in ix
+    ]
+    # the string-cast values each frame contributes, and where
+    strs: list[list[str]] = [[] for _ in frames]
+    for (b, a), cols in zip(ix, shared):
+        for j in (b, a):
+            strs[j] += [c for c in cols if c not in strs[j]]
+    missing = set(missing)
+    in_missing = {j for i in missing for j in ix[i]}
+    fields = [_user_fields(f) if j in in_missing else [] for j, f in enumerate(frames)]
+    rid_type = next(
+        (f.schema[ROW_ID].dataType for f, k in zip(frames, keyed) if k), T.LongType()
     )
-    a = after.select(
-        ROW_ID, *[qcol(c).cast("string").alias(f"__a_{c}") for c in shared]
-    )
-    row = (
-        a.join(b, ROW_ID)
-        .agg(
-            *[
-                F.sum(
-                    (~qcol(f"__a_{c}").eqNullSafe(qcol(f"__b_{c}"))).cast("long")
-                ).alias(c)
-                for c in shared
-            ]
+
+    def tagged(j: int, f: DataFrame) -> DataFrame:
+        if keyed[j]:
+            key = [qcol(ROW_ID).cast(rid_type), F.lit(None).cast("int"),
+                   F.lit(None).cast("long")]
+        else:
+            key = [F.lit(None).cast(rid_type), F.lit(j),
+                   F.monotonically_increasing_id()]
+        entry = F.struct(
+            F.lit(j).alias("j"),
+            F.array(*[qcol(c).cast("string") for c in strs[j]])
+            .cast("array<string>").alias("s"),
+            F.array(*[_missing_expr(x) for x in fields[j]])
+            .cast("array<boolean>").alias("m"),
         )
-        .collect()[0]
+        return f.select(*[k.alias(n) for k, n in zip(key, ("r", "f", "u"))],
+                        entry.alias("e"))
+
+    # The per-group sums are SQL text: a few hundred Column objects
+    # built through the Python API cost seconds of driver time, one
+    # parsed expression list costs milliseconds.
+    grouped = (
+        functools.reduce(DataFrame.union, [tagged(j, f) for j, f in enumerate(frames)])
+        .groupBy("r", "f", "u")
+        .agg(F.collect_list("e").alias("l"))
+        .selectExpr(*[f"filter(l, x -> x.j = {j}) AS e{j}" for j in range(len(frames))])
     )
-    return {c: int(row[c] or 0) for c in shared}
+
+    def value(j: int, c: str) -> str:
+        return f"try_element_at(e{j}, 1).s[{strs[j].index(c)}]"
+
+    sums = [f"sum(size(e{j})) AS n{j}" for j in range(len(frames))]
+    sums += [
+        f"sum(aggregate(e{j}, 0L, (acc, x) -> acc + CAST(x.m[{k}] AS BIGINT))) AS m{j}_{k}"
+        for j in range(len(frames)) for k in range(len(fields[j]))
+    ]
+    sums += [
+        f"sum(CAST(size(e{b}) > 0 AND size(e{a}) > 0"
+        f" AND NOT ({value(b, c)} <=> {value(a, c)}) AS BIGINT)) AS c{i}_{k}"
+        for i, (b, a) in enumerate(ix) for k, c in enumerate(shared[i])
+    ]
+    row = grouped.selectExpr(*sums).collect()[0]
+
+    def count(name: str) -> int:
+        return int(row[name] or 0)
+
+    def missing_of(j: int) -> dict[str, int]:
+        return {x.name: count(f"m{j}_{k}") for k, x in enumerate(fields[j])}
+
+    out = []
+    for i, (b, a) in enumerate(ix):
+        m: dict[str, Any] = {
+            "rows_before": count(f"n{b}"),
+            "rows_after": count(f"n{a}"),
+            "cells_changed": {c: count(f"c{i}_{k}") for k, c in enumerate(shared[i])},
+        }
+        if i in missing:
+            m["missing_before"] = missing_of(b)
+            m["missing_after"] = missing_of(a)
+        out.append(m)
+    return out
+
+
+def cells_changed(before: DataFrame, after: DataFrame) -> dict[str, int]:
+    """Per-column changed-cell counts of one ``(before, after)`` pair
+    (reference parity: every method reports per-column "Made N changes"
+    updates in the reference's textCleaning method) — the one-pair case of
+    ``boundary_metrics``."""
+    return boundary_metrics([(before, after)])[0]["cells_changed"]
 
 
 class CleaningPipeline:
@@ -209,9 +312,10 @@ class CleaningPipeline:
         upstream lineage once per statistics job — at 4 stat ops that is 4
         extra full scans. Default ``None`` = auto: persist a boundary only
         when ≥2 downstream enabled ops will run driver-side statistics jobs
-        over it (the re-scan count that makes the persist pay for itself).
-        ``True``/``False`` force it — persisting the working set is still a
-        deliberate capacity decision on a real cluster."""
+        over it (the re-scan count that makes the persist pay for itself);
+        with ``collect_metrics`` every frame the metrics query measures is
+        persisted. ``True``/``False`` force it — persisting the working set
+        is still a deliberate capacity decision on a real cluster."""
         self.bug_compat = bug_compat
         self.collect_metrics = collect_metrics
         self.persist_intermediate = persist_intermediate
@@ -341,56 +445,40 @@ class CleaningPipeline:
             for n in enabled
         }
 
-        for name in CANONICAL_ORDER:
-            cfg = operations.get(name)
-            if not cfg or not cfg.get("enabled", False):
-                continue
+        def pin(frame: DataFrame, auto: bool) -> DataFrame:
+            if self.persist_intermediate is not None:
+                auto = self.persist_intermediate
+            if not auto:
+                return frame
+            frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(frame)
+            return frame
+
+        # Metrics mode pins every frame it will measure before anything
+        # reads it, so each op's step (UDFs included) runs once for the op
+        # chain and the metrics query together.
+        metrics = self.collect_metrics
+        if metrics:
+            current = pin(current, True)
+        measured: list[tuple[str, DataFrame, DataFrame]] = []
+        for name in enabled:
+            cfg = operations[name]
             op_report: dict[str, Any] = {"status": "success"}
             logger.info("Running %s operation...", name)
             try:
-                before = current.count() if self.collect_metrics else None
                 nxt = self._apply_one(current, name, cfg)
-                if self.collect_metrics:
-                    after = nxt.count()
-                    op_report.update(
-                        {
-                            "rows_before": before, "rows_after": after,
-                            "columns_before": len(current.columns),
-                            "columns_after": len(nxt.columns),
-                        }
-                    )
-                    changed = cells_changed(current, nxt)
-                    op_report["cells_changed"] = {
-                        c: n for c, n in changed.items() if n
-                    }
-                    op_report["updates"] = [
-                        f"Column '{c}': Made {n} changes"
-                        for c, n in changed.items() if n
-                    ]
-                    if name == "duplicates":
-                        op_report["duplicate_count"] = before - after
-                    if name == "missing_values":
-                        # Reference UI parity: its report drives a
-                        # before/after missing-value chart
-                        # (/root/reference/frontend/script.js:506-540).
-                        from .profile import missing_counts
-
-                        op_report["missing_before"] = missing_counts(current)
-                        op_report["missing_after"] = missing_counts(nxt)
-                current = boundary_scrub(nxt) if self.bug_compat else nxt
-                if self.persist_intermediate is not None:
-                    do_persist = self.persist_intermediate
+                if metrics:
+                    # the measured frame; a bug-compat scrub is a cheap
+                    # projection over it, and pinning both would double
+                    # the cached-plan nesting every later plan carries
+                    nxt = pin(nxt, True)
+                boundary = boundary_scrub(nxt) if self.bug_compat else nxt
+                if metrics:
+                    measured.append((name, current, nxt))
                 else:
-                    # metrics mode re-scans every boundary for row counts
-                    # and changed-cell joins, so any non-final boundary
-                    # is worth pinning there.
-                    later = enabled.index(name) < len(enabled) - 1
-                    do_persist = stat_after[name] >= 2 or (
-                        self.collect_metrics and later
-                    )
-                if do_persist:
-                    current = current.persist(StorageLevel.MEMORY_AND_DISK)
-                    persisted.append(current)
+                    # pin where ≥2 later ops re-scan this boundary for fits
+                    boundary = pin(boundary, stat_after[name] >= 2)
+                current = boundary
                 logger.info("%s operation completed successfully", name)
             except Exception as e:  # error-isolated: keep previous df
                 op_report = {"status": "error", "message": str(e)}
@@ -398,13 +486,49 @@ class CleaningPipeline:
             report["operations"][name] = op_report
             report["order"].append(name)
 
+        if measured:
+            # Every metric of every op in one aggregate query over the
+            # pinned frames; the loop above ran no metric action.
+            results = boundary_metrics(
+                [(b, a) for _, b, a in measured],
+                missing=[i for i, (n, _, _) in enumerate(measured) if n == "missing_values"],
+            )
+            for (name, before, after), m in zip(measured, results):
+                changed = {c: n for c, n in m["cells_changed"].items() if n}
+                op_report = report["operations"][name]
+                op_report.update(
+                    {
+                        "rows_before": m["rows_before"], "rows_after": m["rows_after"],
+                        "columns_before": len(before.columns),
+                        "columns_after": len(after.columns),
+                        "cells_changed": changed,
+                        "updates": [
+                            f"Column '{c}': Made {n} changes" for c, n in changed.items()
+                        ],
+                    }
+                )
+                if name == "duplicates":
+                    op_report["duplicate_count"] = m["rows_before"] - m["rows_after"]
+                if name == "missing_values":
+                    # Reference UI parity: its report drives a
+                    # before/after missing-value chart in the frontend.
+                    op_report["missing_before"] = m["missing_before"]
+                    op_report["missing_after"] = m["missing_after"]
+
         report["processing_time_seconds"] = round(time.time() - t0, 4)
         logger.info(
             "Pipeline completed in %.2fs; final columns: %d",
             report["processing_time_seconds"], len(current.columns),
         )
         report["final_columns"] = list(current.columns)
-        # Keep only the final frame pinned; free the intermediates.
-        for p in persisted[:-1]:
-            p.unpersist(blocking=False)
+        # Free the intermediates. The caller's write reads the returned
+        # frame: it stays pinned when it is (always so in metrics mode
+        # without bug_compat; unpersist it after the write), else the last
+        # pinned frame its lineage reads stays.
+        kept = current if any(p is current for p in persisted) else (
+            persisted[-1] if persisted else None
+        )
+        for p in persisted:
+            if p is not kept:
+                p.unpersist(blocking=False)
         return current, sanitize_for_json(report)

@@ -181,15 +181,24 @@ class DataForgeService:
         problems = validate_operations(operations)
         if problems:
             raise ServiceError(400, f"Invalid operations: {problems}")
-        if not os.path.exists(file_path):
-            raise ServiceError(404, f"File not found: {file_path}")
+        # Only uploaded files are cleaned: the real path (symlinks and
+        # ".." resolved) must lie directly in upload_dir, where upload puts them.
+        root = os.path.realpath(self.upload_dir)
+        real = os.path.realpath(file_path)
+        if os.path.dirname(real) != root or not os.path.exists(real):
+            raise ServiceError(404, "File not found")
 
-        base = os.path.splitext(os.path.basename(file_path))[0]
+        base = os.path.splitext(os.path.basename(real))[0]
         output_path = os.path.join(self.upload_dir, f"{base}_cleaned.csv")
-        logger.info("Starting pipeline for file: %s", file_path)
-        df = dfio.read_csv(self.spark, file_path)
+        logger.info("Starting pipeline for file: %s", real)
+        df = dfio.read_csv(self.spark, real)
         out, report = CleaningPipeline(collect_metrics=True).run(df, operations)
-        dfio.write_csv(out, output_path, single_file=True)
+        try:
+            dfio.write_csv(out, output_path, single_file=True)
+        finally:
+            # the pipeline frees its intermediates; the returned frame is
+            # pinned for this write only
+            out.unpersist(blocking=False)
         logger.info("Final data saved to: %s", output_path)
         return {
             "status": "success",

@@ -170,6 +170,18 @@ def test_error_contract(server):
     assert r.status == 404
 
 
+def test_clean_data_outside_upload_dir_is_404(server, tmp_path):
+    """The server cleans uploaded files only: an existing CSV outside the
+    upload directory answers 404, before any Spark work."""
+    outside = tmp_path / "outside.csv"
+    outside.write_bytes(CSV)
+    ops = json.dumps({"duplicates": {"enabled": True}})
+    for path in (str(outside), str(tmp_path / "uploads" / ".." / "outside.csv")):
+        r, body = _post(server, "/clean-data", {"file_path": path, "operations": ops})
+        assert r.status == 404, body
+        assert json.loads(body)["detail"] == "File not found"
+
+
 def test_frontend_served_and_manifest_driven(server):
     r, body = _get(server, "/ui")
     assert r.status == 200

@@ -104,6 +104,42 @@ def test_service_rejects_bad_input(spark, tmp_path):
     assert e.value.status_code == 400
 
 
+def test_service_clean_confined_to_upload_dir(spark, tmp_path):
+    """clean_data reads only files inside upload_dir: a path elsewhere,
+    a "../" escape and a symlink out of the directory all answer 404, as
+    a missing file does; operation validation still answers 400 first."""
+    up_dir = tmp_path / "uploads"
+    svc = DataForgeService(spark, upload_dir=str(up_dir))
+    outside = tmp_path / "outside.csv"
+    outside.write_text("a,b\n1,x\n")
+    (up_dir / "link.csv").symlink_to(outside)
+    ops = '{"duplicates": {"enabled": true}}'
+    for path in (str(outside), str(up_dir / ".." / "outside.csv"),
+                 str(up_dir / "link.csv"), str(up_dir / "ghost.csv"), str(up_dir)):
+        with pytest.raises(ServiceError) as e:
+            svc.clean_data(path, ops)
+        assert (e.value.status_code, e.value.detail) == (404, "File not found"), path
+    with pytest.raises(ServiceError) as e:
+        svc.clean_data(str(outside), '{"missing_values": {"strategy": "bogus"}}')
+    assert e.value.status_code == 400
+    assert not os.path.exists(up_dir / "outside_cleaned.csv")
+
+
+def test_service_clean_releases_cache(spark, tmp_path):
+    """Each clean pins its frames for the metrics query and the write, and
+    releases all of them: after two requests the session caches nothing."""
+    spark.catalog.clearCache()
+    svc = DataForgeService(spark, upload_dir=str(tmp_path / "uploads"))
+    src = tmp_path / "mini.csv"
+    src.write_text("a,b\n1,x\n2,\n2,\n,y\n")
+    up = svc.upload("mini.csv", str(src))
+    ops = ('{"missing_values": {"enabled": true, "strategy": "fill_mean"},'
+           ' "duplicates": {"enabled": true}, "text_cleaning": {"enabled": true}}')
+    for _ in range(2):
+        assert svc.clean_data(up["file_path"], ops)["status"] == "success"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ---------------------------------------------------------------------------
 # regressions for the review-fix batch
 # ---------------------------------------------------------------------------

@@ -1,6 +1,9 @@
 """Degraded-input robustness for the Arrow-batched vector scorers: NULL /
 ragged embeddings and empty query sets must degrade the way the Column
-cosine they replaced did (NULL score / empty result), never fail the task."""
+cosine they replaced did (NULL score / empty result), never fail the task.
+
+The vector tests run at one partition (all rows in one Arrow batch) and
+at four, so a row's result cannot depend on which rows share its batch."""
 
 from pyspark.sql import functions as F
 
@@ -8,36 +11,41 @@ from dataforge_spark.functions.vectors import batch_cosine_udf
 from dataforge_spark.similarity.brute_force import cosine_topk
 
 
-def _corpus(spark):
+PARTITIONS = (1, 4)
+
+
+def _corpus(spark, parts):
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [0.0, 1.0, 0.0]),
         (3, [1.0, 1.0, 0.0]),
     ]
-    return spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    return spark.createDataFrame(rows, "vec_id int, embedding array<double>").repartition(parts)
 
 
 def test_cosine_topk_empty_query_set(spark):
-    corpus = _corpus(spark)
-    empty = corpus.where(F.lit(False))
-    out = cosine_topk(corpus, empty, k=2)
-    assert out.columns == ["query_id", "neighbor_id", "cos_sim"]
-    assert out.count() == 0
+    for parts in PARTITIONS:
+        corpus = _corpus(spark, parts)
+        empty = corpus.where(F.lit(False))
+        out = cosine_topk(corpus, empty, k=2)
+        assert out.columns == ["query_id", "neighbor_id", "cos_sim"]
+        assert out.count() == 0
 
 
 def test_cosine_topk_null_vectors_skipped(spark):
-    corpus = _corpus(spark).unionByName(
-        spark.createDataFrame(
-            [(4, None)], "vec_id int, embedding array<double>"
-        )
-    )
-    queries = corpus.where(F.col("vec_id").isin(1, 4))
-    out = cosine_topk(corpus, queries, k=10).collect()
-    # query 4 (null vector) produces no rows; corpus row 4 is never a neighbor
-    assert {r["query_id"] for r in out} == {1}
-    assert all(r["neighbor_id"] != 4 for r in out)
-    by_n = {r["neighbor_id"]: r["cos_sim"] for r in out}
-    assert by_n[3] == round(1 / 2**0.5, 6)
+    for parts in PARTITIONS:
+        corpus = _corpus(spark, parts).unionByName(
+            spark.createDataFrame(
+                [(4, None)], "vec_id int, embedding array<double>"
+            )
+        ).repartition(parts)
+        queries = corpus.where(F.col("vec_id").isin(1, 4))
+        out = cosine_topk(corpus, queries, k=10).collect()
+        # query 4 (null vector) produces no rows; corpus row 4 is never a neighbor
+        assert {r["query_id"] for r in out} == {1}
+        assert all(r["neighbor_id"] != 4 for r in out)
+        by_n = {r["neighbor_id"]: r["cos_sim"] for r in out}
+        assert by_n[3] == round(1 / 2**0.5, 6)
 
 
 def test_batch_cosine_null_and_ragged(spark):
@@ -47,27 +55,31 @@ def test_batch_cosine_null_and_ragged(spark):
         (None, [1.0, 0.0], None),           # NULL side
         ([1.0, 0.0, 0.0], [1.0, 0.0], None),  # ragged
         ([0.0, 0.0], [1.0, 0.0], 0.0),      # zero norm scores 0.0
+        ([1.0, 0.0, 0.0], [0.0, 1.0, 0.0], 0.0),  # 3-wide pair is not ragged
+        ([1.0, 2.0], [1.0, 2.0, 3.0], None),  # b longer than a
     ]
-    df = spark.createDataFrame(
-        [(a, b, e) for a, b, e in rows],
-        "a array<double>, b array<double>, expect double",
-    )
     cos = batch_cosine_udf()
-    got = df.select(F.round(cos("a", "b"), 6).alias("s"), "expect").collect()
-    for r in got:
-        assert r["s"] == r["expect"], (r["s"], r["expect"])
+    for parts in PARTITIONS:
+        df = spark.createDataFrame(
+            [(a, b, e) for a, b, e in rows],
+            "a array<double>, b array<double>, expect double",
+        ).repartition(parts)
+        got = df.select(F.round(cos("a", "b"), 6).alias("s"), "expect").collect()
+        for r in got:
+            assert r["s"] == r["expect"], (parts, r["s"], r["expect"])
 
 
 def test_batch_cosine_all_null_batch(spark):
-    df = spark.createDataFrame(
-        [(None, None)] * 3, "a array<double>, b array<double>"
-    )
     cos = batch_cosine_udf()
-    assert [r["s"] for r in df.select(cos("a", "b").alias("s")).collect()] == [
-        None,
-        None,
-        None,
-    ]
+    for parts in PARTITIONS:
+        df = spark.createDataFrame(
+            [(None, None)] * 3, "a array<double>, b array<double>"
+        ).repartition(parts)
+        assert [r["s"] for r in df.select(cos("a", "b").alias("s")).collect()] == [
+            None,
+            None,
+            None,
+        ]
 
 
 def test_fill_median_leaves_all_null_column(spark):
